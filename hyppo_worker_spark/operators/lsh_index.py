@@ -13,17 +13,20 @@ Both are parquet directories written in append mode: admitting a batch
 appends its rows; nothing existing is rewritten (object-store
 friendly — no read-modify-write). Checking a new batch then joins the
 batch's (broadcast) banding rows against ``banded/`` and pulls shingle
-arrays only for candidate ids — the corpus text is never re-read.
+arrays only for candidate ids — the corpus text is never re-read; the
+caller verifies the candidates.
 
 ``banded/`` is directory-partitioned by ``band_pt`` (an md5 bucket of
 the band key) and sorted by ``band_key`` within each file:
 
 - a probe batch only ever joins rows whose band_pt values it itself
   hashes into, so ``pairs_against`` statically prunes the scan to
-  those partitions (the values are collected from the PROBE side —
-  at most ``n_pt`` small integers, never corpus data). A single-doc
-  lookup reads ~bands/n_pt of the index files; a large batch covers
-  every bucket and degrades gracefully to a full scan;
+  those partitions. The values come with the probe rows: the
+  streaming sink pulls each batch doc's band_pt together with its
+  hashes (at most ``n_pt`` small integers, never corpus data), so
+  pruning costs no extra job. A single-doc lookup reads ~bands/n_pt
+  of the index files; a large batch covers every bucket and degrades
+  gracefully to a full scan;
 - the in-file sort gives parquet row-group min/max stats on
   band_key, so even inside a surviving partition, row groups whose
   key range misses the probe keys are skipped by pushdown.
@@ -38,12 +41,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from hyppo_worker_spark.functions import text as TX
-from hyppo_worker_spark.operators.dedup import (
-    _minhash_banded,
-    minhash_pairs_against_banded,
-)
+from hyppo_worker_spark.operators.dedup import _minhash_banded
 
 
 class MinHashLshIndex:
@@ -66,11 +67,16 @@ class MinHashLshIndex:
         self._banded_dir = os.path.join(path, "banded")
         self._shingles_dir = os.path.join(path, "shingles")
 
-    def _band_pt(self, col):
-        return TX.md5_bucket(col, self.n_pt)
+    def band_pt(self, band_key):
+        """The ``banded/`` partition of a band key column."""
+        return TX.md5_bucket(band_key, self.n_pt)
 
     def exists(self) -> bool:
-        return os.path.isdir(self._banded_dir)
+        """Whether any banding rows were admitted (an admission of
+        only sub-``shingle_n`` docs writes none)."""
+        return os.path.isdir(self._banded_dir) and any(
+            d.startswith("band_pt=") for d in os.listdir(self._banded_dir)
+        )
 
     def compute_frames(
         self, docs: DataFrame, id_col: str, text_col: str
@@ -93,7 +99,7 @@ class MinHashLshIndex:
         repartition first so each touched partition gets ONE file per
         admission, not one per upstream task."""
         (
-            banded.withColumn("band_pt", self._band_pt(F.col("band_key")))
+            banded.withColumn("band_pt", self.band_pt(F.col("band_key")))
             .repartition("band_pt")
             .sortWithinPartitions("band_key")
             .write.mode("append")
@@ -102,48 +108,66 @@ class MinHashLshIndex:
         )
         shingles.write.mode("append").parquet(self._shingles_dir)
 
-    def load(self, spark: SparkSession) -> tuple[DataFrame, DataFrame]:
+    def load(
+        self, spark: SparkSession, id_type: T.DataType | None = None
+    ) -> tuple[DataFrame, DataFrame]:
+        """(shingles, banded) frames. Given the ``did`` type, both reads
+        take an explicit schema instead of running parquet's
+        footer-reading schema-inference job."""
+        if id_type is None:
+            return (
+                spark.read.parquet(self._shingles_dir),
+                spark.read.parquet(self._banded_dir),
+            )
+        did = T.StructField("did", id_type)
         return (
-            spark.read.parquet(self._shingles_dir),
-            spark.read.parquet(self._banded_dir),
+            spark.read.schema(
+                T.StructType([did, T.StructField("sh", T.ArrayType(T.StringType()))])
+            ).parquet(self._shingles_dir),
+            spark.read.schema(
+                T.StructType(
+                    [
+                        did,
+                        T.StructField("band_id", T.IntegerType()),
+                        T.StructField("band_key", T.StringType()),
+                        T.StructField("band_pt", T.IntegerType()),
+                    ]
+                )
+            ).parquet(self._banded_dir),
         )
 
     def pairs_against(
         self,
         spark: SparkSession,
-        new_shingles: DataFrame,
-        new_banded: DataFrame,
-        *,
-        threshold: float = 0.8,
-        broadcast_new: bool = True,
-        prune: bool = True,
+        probe: DataFrame,
+        band_pts: list[int] | None = None,
     ) -> DataFrame:
-        """(corpus_id a_id, new_id b_id, jaccard) pairs of the new
-        batch against everything admitted so far.
+        """Candidate rows (a_id, b_id, sh) of a probe against everything
+        admitted so far: every indexed doc ``a_id`` that shares a band
+        bucket with probe doc ``b_id`` (``a_id != b_id``), with
+        ``a_id``'s indexed shingle set for the caller's exact-Jaccard
+        verify — one row per indexed shingle row of ``a_id``.
 
-        With ``prune`` (default) the index scan is statically filtered
-        to the band_pt partitions the PROBE batch hashes into — the
-        collected list is at most ``n_pt`` integers (probe metadata,
-        never corpus data), and the filter reaches the scan as a
-        partition filter, so non-matching index files are never
-        opened."""
-        docs_c, band_c = self.load(spark)
-        if prune:
-            pts = sorted(
-                r[0]
-                for r in new_banded.select(
-                    self._band_pt(F.col("band_key")).alias("pt")
-                )
-                .distinct()
-                .collect()
+        ``probe`` holds (did, band_id, band_key) banding rows and is
+        broadcast: one batch's rows. ``band_pts`` are the band_pt
+        values of the probe's band keys; given them, the index scan is
+        statically filtered to those partitions and the filter reaches
+        the scan as a partition filter, so non-matching index files
+        are never opened (None scans every partition)."""
+        docs_c, band_c = self.load(spark, probe.schema["did"].dataType)
+        if band_pts is not None and len(band_pts) < self.n_pt:
+            band_c = band_c.filter(F.col("band_pt").isin(band_pts))
+        cand = (
+            band_c.alias("l")
+            .join(
+                F.broadcast(probe).alias("r"),
+                (F.col("l.band_id") == F.col("r.band_id"))
+                & (F.col("l.band_key") == F.col("r.band_key"))
+                & (F.col("l.did") != F.col("r.did")),
             )
-            if len(pts) < self.n_pt:
-                band_c = band_c.filter(F.col("band_pt").isin(pts))
-        return minhash_pairs_against_banded(
-            docs_c,
-            band_c,
-            new_shingles,
-            new_banded,
-            threshold=threshold,
-            broadcast_new=broadcast_new,
+            .select(F.col("l.did").alias("a_id"), F.col("r.did").alias("b_id"))
+            .distinct()
         )
+        return docs_c.join(
+            F.broadcast(cand), F.col("did") == F.col("a_id")
+        ).select("a_id", "b_id", "sh")
