@@ -263,7 +263,6 @@ def run_operation(
     registry: IntegrationRegistry,
     handler: DataFileHandler,
     item: WorkInput,
-    capture_logs: bool = True,
     on_status: Callable[[StatusUpdate], None] | None = None,
 ) -> WorkResponse:
     """Dispatch one work item; failures become ``FailureResponse`` with
@@ -280,13 +279,12 @@ def run_operation(
     import logging
 
     buf = io.StringIO()
-    log_handler = None
-    if capture_logs:
-        log_handler = logging.StreamHandler(buf)
-        log_handler.setFormatter(
-            logging.Formatter("%(asctime)s %(levelname)s %(name)s %(message)s")
-        )
-        logging.getLogger().addHandler(log_handler)
+    log_handler = logging.StreamHandler(buf)
+    log_handler.setFormatter(
+        logging.Formatter("%(asctime)s %(levelname)s %(name)s %(message)s")
+    )
+    logging.getLogger().addHandler(log_handler)
+
     def emit(phase: str, **detail) -> None:
         if on_status is not None:
             on_status(
@@ -314,15 +312,13 @@ def run_operation(
             input=item, exception=IntegrationException.from_exception(e)
         )
         emit("failed", exception=type(e).__name__)
-        if capture_logs:
-            buf.write(
-                f"FAILURE {response.exception.exception_class}: "
-                f"{response.exception.message}\n"
-            )
+        buf.write(
+            f"FAILURE {response.exception.exception_class}: "
+            f"{response.exception.message}\n"
+        )
     finally:
-        if log_handler is not None:
-            logging.getLogger().removeHandler(log_handler)
-    if capture_logs and response.log_file is None:
+        logging.getLogger().removeHandler(log_handler)
+    if response.log_file is None:
         job = getattr(item, "job", None)
         task = getattr(item, "task", None)
         if job is None and task is not None:

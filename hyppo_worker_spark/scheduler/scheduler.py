@@ -457,32 +457,32 @@ class HyppoEngine:
         return True
 
     def run_until_idle(self, max_items: int | None = None) -> int:
-        """Synchronously drain all queues (single- or multi-slot).
+        """Synchronously drain all queues, one thread per slot.
         Returns the number of items executed. A concurrent
-        ``shutdown()`` stops delegation of further items."""
-        executed = 0
-        if self.config.worker_count <= 1:
-            while (
-                (max_items is None or executed < max_items)
-                and not self._stop.is_set()
-                and self.run_once(0)
-            ):
-                executed += 1
-            self._sweep_expired()
-            return executed
-
+        ``shutdown()`` stops delegation of further items. If a slot
+        raises (e.g. a response callback does), the other slots take
+        no further items and the first exception is re-raised once
+        every slot has stopped."""
         counter_lock = threading.Lock()
         counters = [0]
         active = [0]
+        errors: list[BaseException] = []
 
         def slot_loop(idx: int):
             while not self._stop.is_set():
                 with counter_lock:
-                    if max_items is not None and counters[0] >= max_items:
+                    if errors or (
+                        max_items is not None and counters[0] >= max_items
+                    ):
                         return
                     active[0] += 1
+                ran = False
                 try:
                     ran = self.run_once(idx)
+                except BaseException as e:  # noqa: BLE001 — re-raised after join
+                    with counter_lock:
+                        errors.append(e)
+                    return
                 finally:
                     with counter_lock:
                         active[0] -= 1
@@ -505,6 +505,8 @@ class HyppoEngine:
             t.start()
         for t in threads:
             t.join()
+        if errors:
+            raise errors[0]
         self._sweep_expired()
         return counters[0]
 

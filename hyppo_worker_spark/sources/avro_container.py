@@ -60,12 +60,14 @@ holding files from several schema versions reads as one DataFrame
 Distributed use (no driver bottleneck):
 
 - **write**: ``write_avro(df, path)`` — each Spark partition encodes
-  its rows to one ``part-*.avro`` file via ``mapInPandas`` (Arrow
+  its rows to one ``part-*.avro`` file via ``mapInArrow`` (Arrow
   batches in, one container per task), exactly how the per-task
   records zone lays files out;
 - **read**: ``read_avro(spark, path)`` — ``binaryFile`` scan +
-  ``mapInPandas`` decode, schema recovered from each file's own
-  header and validated against the expected StructType.
+  ``mapInArrow`` decode, schema recovered from each file's own
+  header and validated against the expected StructType. Without an
+  expected schema, discovery parses ONE file's header on the driver
+  (no row is decoded there).
 
 Interop evidence (no Avro library in the environment — probed every
 round): beyond spec-level unit tests (hand-computed zigzag/varint
@@ -136,23 +138,10 @@ def zigzag_decode(buf: memoryview, pos: int) -> tuple[int, int]:
     return (u >> 1) ^ -(u & 1), pos
 
 
-def _enc_value(dt: T.DataType, v, out: bytearray) -> None:
-    """Generic one-off encode (slow path); delegates to the specialized
-    field codec so logical-type support never drifts between paths."""
-    if v is None:
-        raise ValueError("null for non-nullable field")
-    _field_encoder(dt)(v, out)
-
-
-def _dec_value(dt: T.DataType, buf: memoryview, pos: int):
-    return _field_decoder(dt)(buf, pos)
-
-
-# Per-schema specialized row codecs: the generic per-value isinstance
-# chain costs ~6 us/row; a list of per-FIELD closures (type dispatch
-# done once, at build time) runs ~4-5x faster — this is the records
-# zone's hot loop (measured: 600k lineitem rows 3.5s -> <1s encode).
-_CODEC_CACHE: dict[str, tuple[list, list]] = {}
+# A row is a record: write_container / read_container build ONE row
+# codec per file from the StructType, a tree of per-site closures (type
+# dispatch done at build time, not per value) — the records zone's hot
+# loop runs ~4-5x faster than a per-value isinstance chain.
 
 
 def _field_encoder(
@@ -525,77 +514,6 @@ def _field_decoder(
     raise NotImplementedError(f"avro container: unsupported type {dt}")
 
 
-def _row_codecs(schema: T.StructType) -> tuple[list, list]:
-    key = schema.json()
-    hit = _CODEC_CACHE.get(key)
-    if hit is None:
-        encs = [
-            (f.name, f.nullable, _field_encoder(f.dataType))
-            for f in schema.fields
-        ]
-        decs = [
-            (f.name, f.nullable, _field_decoder(f.dataType))
-            for f in schema.fields
-        ]
-        hit = _CODEC_CACHE[key] = (encs, decs)
-    return hit
-
-
-def encode_record(schema: T.StructType, row: dict, out: bytearray) -> None:
-    """Encode one record against the schema ``struct_to_avro`` emits:
-    nullable fields are the union ``[T, "null"]`` (reference TestRecord
-    shape), so the branch prefix is zigzag(0)=\\x00 for a VALUE and
-    zigzag(1)=\\x02 for NULL — the branch index is into the DECLARED
-    union order (Avro spec, "Unions")."""
-    encs, _ = _row_codecs(schema)
-    get = row.get
-    for name, nullable, enc in encs:
-        v = get(name)
-        if nullable:
-            if v is None:
-                out.append(2)  # zigzag(1): the "null" branch of [T,"null"]
-                continue
-            out.append(0)  # zigzag(0): the value branch of [T,"null"]
-        enc(v, out)
-
-
-def decode_record(
-    schema: T.StructType,
-    buf: memoryview,
-    pos: int,
-    null_branch: dict[str, int] | None = None,
-    special: dict[str, tuple] | None = None,
-) -> tuple[dict, int]:
-    """Decode one record. ``null_branch`` is the PATH-keyed map from
-    ``avro_schema.null_branch_indices`` over the file's own schema
-    (top-level field names, plus nested sites like ``f[]``, ``f{}``,
-    ``f.sub``) — the same map ``read_container`` uses, so nested union
-    sites honor the file's declared branch order too. When omitted,
-    the ``struct_to_avro`` writer convention ``[T,"null"]`` (null
-    index 1) is assumed at every union site."""
-    if null_branch is None and special is None:
-        _, decs = _row_codecs(schema)  # cached writer-convention path
-    else:
-        decs = [
-            (
-                f.name,
-                f.nullable,
-                _field_decoder(f.dataType, null_branch, f.name, special),
-            )
-            for f in schema.fields
-        ]
-    row = {}
-    for name, nullable, dec in decs:
-        if nullable:
-            nb = 1 if null_branch is None else null_branch.get(name, 1)
-            branch, pos = zigzag_decode(buf, pos)
-            if branch == nb:
-                row[name] = None
-                continue
-        row[name], pos = dec(buf, pos)
-    return row, pos
-
-
 # -- container framing ----------------------------------------------------
 
 
@@ -616,6 +534,30 @@ def _enc_meta_map(meta: dict[str, bytes]) -> bytes:
         out += zigzag_encode(len(v)) + v
     out += zigzag_encode(0)  # end of map blocks
     return bytes(out)
+
+
+def _read_header(buf: memoryview) -> tuple[dict[str, bytes], bytes, int]:
+    """Parse a container header → (metadata map, 16-byte sync marker,
+    offset of the first data block)."""
+    if bytes(buf[:4]) != MAGIC:
+        raise ValueError("not an Avro object container file")
+    pos = 4
+    meta: dict[str, bytes] = {}
+    while True:
+        n, pos = zigzag_decode(buf, pos)
+        if n == 0:
+            break
+        if n < 0:  # spec: negative count precedes a byte size
+            n = -n
+            _, pos = zigzag_decode(buf, pos)
+        for _ in range(n):
+            kl, pos = zigzag_decode(buf, pos)
+            k = bytes(buf[pos : pos + kl]).decode()
+            pos += kl
+            vl, pos = zigzag_decode(buf, pos)
+            meta[k] = bytes(buf[pos : pos + vl])
+            pos += vl
+    return meta, bytes(buf[pos : pos + 16]), pos + 16
 
 
 def write_container(
@@ -646,6 +588,7 @@ def write_container(
     if codec not in ("null", "deflate", "bzip2", "xz"):
         raise ValueError(f"unsupported avro codec {codec}")
     if declared_schema is None:
+        # writer convention: [T,"null"] (null byte zigzag(1)=\x02)
         schema_json = struct_to_avro(schema)
         nb: dict[str, int] | None = None
         special: dict[str, tuple] | None = None
@@ -679,40 +622,14 @@ def write_container(
         {"avro.schema": schema_json.encode(), "avro.codec": codec.encode()}
     )
     out += sync
-    if declared_schema is None:
-        # writer convention: [T,"null"] (null byte zigzag(1)=\x02)
-        encs4 = [
-            (name, 2 if nullable else None, 0, enc)
-            for name, nullable, enc in _row_codecs(schema)[0]
-        ]
-    else:
-        encs4 = []
-        for f in schema.fields:
-            if f.nullable:
-                inull = nb.get(f.name, 1)
-                null_b, val_b = (0, 2) if inull == 0 else (2, 0)
-            else:
-                null_b = None
-                val_b = 0
-            encs4.append(
-                (f.name, null_b, val_b,
-                 _field_encoder(f.dataType, nb, f.name, special))
-            )
+    enc_row = _field_encoder(schema, nb, "", special)
     i = 0
     while i < len(rows):
         chunk = rows[i : i + block_records]
         i += block_records
         payload = bytearray()
         for r in chunk:
-            get = r.get
-            for name, null_b, val_b, enc in encs4:
-                v = get(name)
-                if null_b is not None:
-                    if v is None:
-                        payload.append(null_b)
-                        continue
-                    payload.append(val_b)
-                enc(v, payload)
+            enc_row(r, payload)
         body = bytes(payload)
         if codec == "deflate":
             # RFC-1951 raw deflate (no zlib wrapper) per the spec
@@ -737,56 +654,26 @@ def read_container(
     under the file's own WRITER schema and then resolved to the
     reader's shape per the spec's Schema Resolution rules; the
     returned StructType is the reader's."""
-    from hyppo_worker_spark.sources.avro_schema import avro_to_struct
-
-    buf = memoryview(data)
-    if bytes(buf[:4]) != MAGIC:
-        raise ValueError("not an Avro object container file")
-    pos = 4
-    meta: dict[str, bytes] = {}
-    while True:
-        n, pos = zigzag_decode(buf, pos)
-        if n == 0:
-            break
-        if n < 0:  # spec: negative count precedes a byte size
-            n = -n
-            _, pos = zigzag_decode(buf, pos)
-        for _ in range(n):
-            kl, pos = zigzag_decode(buf, pos)
-            k = bytes(buf[pos : pos + kl]).decode()
-            pos += kl
-            vl, pos = zigzag_decode(buf, pos)
-            meta[k] = bytes(buf[pos : pos + vl])
-            pos += vl
     from hyppo_worker_spark.sources.avro_schema import (
+        avro_to_struct,
         null_branch_indices,
+        schema_resolver,
         special_codecs,
     )
 
+    buf = memoryview(data)
+    meta, sync, pos = _read_header(buf)
     schema_json = meta["avro.schema"].decode()
     codec = meta.get("avro.codec", b"null").decode()
     schema = avro_to_struct(schema_json)
-    # branch bytes follow the file's DECLARED union order — a foreign
-    # ["null",T] file decodes correctly, not just our own [T,"null"]
-    null_branch = null_branch_indices(schema_json)
-    # enum (zigzag symbol index) and fixed (raw N bytes) sites encode
-    # differently from the StringType/BinaryType they map to
-    special = special_codecs(schema_json)
-    sync = bytes(buf[pos : pos + 16])
-    pos += 16
+    # decode under the file's OWN schema: union branch bytes follow its
+    # declared order at every site (a foreign ["null",T] file decodes
+    # too), and enum / fixed sites by their wire form, not the
+    # StringType/BinaryType they map to
+    dec_row = _field_decoder(
+        schema, null_branch_indices(schema_json), "", special_codecs(schema_json)
+    )
     rows: list[dict] = []
-    # decoders built ONCE per file with the file's own null-branch
-    # map, so nested unions (array items, map values, struct fields)
-    # also honor the declared order
-    decs_nb = [
-        (
-            f.name,
-            null_branch.get(f.name, 1) if f.nullable else None,
-            _field_decoder(f.dataType, null_branch, f.name, special),
-        )
-        for f in schema.fields
-    ]
-    zz = zigzag_decode
     while pos < len(buf):
         count, pos = zigzag_decode(buf, pos)
         size, pos = zigzag_decode(buf, pos)
@@ -806,21 +693,12 @@ def read_container(
         bpos = 0
         append = rows.append
         for _ in range(count):
-            row = {}
-            for name, nb, dec in decs_nb:
-                if nb is not None:
-                    branch, bpos = zz(bview, bpos)
-                    if branch == nb:
-                        row[name] = None
-                        continue
-                row[name], bpos = dec(bview, bpos)
+            row, bpos = dec_row(bview, bpos)
             append(row)
         if bytes(buf[pos : pos + 16]) != sync:
             raise ValueError("sync marker mismatch — corrupt container")
         pos += 16
     if reader_schema is not None:
-        from hyppo_worker_spark.sources.avro_schema import schema_resolver
-
         reader_json = (
             reader_schema
             if isinstance(reader_schema, str)
@@ -882,7 +760,11 @@ def write_avro(
         # empty dataset: one header-only container so readers see the
         # schema (mirrors the jar path's empty part file)
         with open(os.path.join(path, "part-empty.avro"), "wb") as fh:
-            fh.write(write_container(schema, [], codec=codec))
+            fh.write(
+                write_container(
+                    schema, [], codec=codec, declared_schema=declared_schema
+                )
+            )
     return int(total)
 
 
@@ -909,10 +791,7 @@ def read_avro(
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from hyppo_worker_spark.sources.avro_schema import (
-        avro_to_struct,
-        schema_resolver,
-    )
+    from hyppo_worker_spark.sources.avro_schema import avro_to_struct
 
     if reader_schema is not None:
         if expected is not None:
@@ -935,10 +814,8 @@ def read_avro(
         if not first:
             raise FileNotFoundError(f"no .avro files under {path}")
         with open(os.path.join(path, first[0]), "rb") as fh:
-            expected, _, _ = read_container(fh.read())
-        # rows are discarded; only the header schema is used. Cheap for
-        # the per-task file sizes the records zone writes; a real
-        # header-only parse is a future micro-optimization.
+            meta, _, _ = _read_header(memoryview(fh.read()))
+        expected = avro_to_struct(meta["avro.schema"].decode())
     exp = expected
 
     # pathGlobFilter, not a glob-in-path: a glob path makes Spark's
@@ -954,17 +831,12 @@ def read_avro(
     def dec(it: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         for batch in it:
             for r in batch.to_pylist():
-                blob = bytes(r["content"])
-                schema, _codec, rows = read_container(blob)
-                if reader_json is not None:
-                    # per-file resolution: the writer schema comes from
-                    # the file's own header (extracted by read_container
-                    # already — re-parse the embedded JSON for the
-                    # resolver, which works on Avro JSON, not StructType)
-                    writer_json = _embedded_schema_json(blob)
-                    conv = schema_resolver(writer_json, reader_json)
-                    rows = [conv(row) for row in rows]
-                elif schema != exp:
+                # with reader_json, each file resolves from its OWN
+                # writer schema to the reader's, whose StructType is exp
+                schema, _codec, rows = read_container(
+                    bytes(r["content"]), reader_schema=reader_json
+                )
+                if schema != exp:
                     raise ValueError(
                         f"avro schema mismatch in {r['path']}: "
                         f"{schema} != {exp}"
@@ -973,31 +845,6 @@ def read_avro(
                     yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
     return bin_df.mapInArrow(dec, exp)
-
-
-def _embedded_schema_json(data: bytes) -> str:
-    """The avro.schema metadata value of a container file, verbatim."""
-    buf = memoryview(data)
-    if bytes(buf[:4]) != MAGIC:
-        raise ValueError("not an Avro object container file")
-    pos = 4
-    while True:
-        n, pos = zigzag_decode(buf, pos)
-        if n == 0:
-            break
-        if n < 0:
-            n = -n
-            _, pos = zigzag_decode(buf, pos)
-        for _ in range(n):
-            kl, pos = zigzag_decode(buf, pos)
-            k = bytes(buf[pos : pos + kl]).decode()
-            pos += kl
-            vl, pos = zigzag_decode(buf, pos)
-            v = bytes(buf[pos : pos + vl])
-            pos += vl
-            if k == "avro.schema":
-                return v.decode()
-    raise ValueError("container has no avro.schema metadata")
 
 
 def _strip_nullability(dt: T.DataType) -> T.DataType:

@@ -9,9 +9,12 @@ Key scheme preserved from ``worker/src/main/scala/com/harrys/hyppo/worker/data/S
 
 Uploads record size + MD5 (:62-69, :146-148); downloads verify the
 checksum against the manifest (:138-144). Record files are written
-with Spark (parquet by default; avro when the spark-avro jar is
-present — probed once per session). Raw files are opaque gzipped
-blobs, read back via Spark's ``binaryFile`` source.
+in the handler's ``records_fmt`` (parquet by default; ``avro-py`` is
+the pure-Python Avro container, ``avro`` the spark-avro jar). Avro
+record files read back through the jar when it is present (probed
+once per session) and through the pure-Python reader otherwise. Raw
+files are opaque gzipped blobs, read back via Spark's ``binaryFile``
+source.
 """
 
 from __future__ import annotations
@@ -148,13 +151,11 @@ class DataFileHandler:
 
     # -- processed record files ---------------------------------------
 
-    def write_records(
-        self, task: DataIngestionTask, df: DataFrame, fmt: str | None = None
-    ) -> RemoteProcessedDataFile:
+    def write_records(self, task: DataIngestionTask, df: DataFrame) -> RemoteProcessedDataFile:
         """Write a typed DataFrame to the records zone; manifest
         carries total size + md5-of-sorted-part-md5s + record count
         (count observed from the write, not a second scan)."""
-        fmt = fmt or self.records_fmt or "parquet"
+        fmt = self.records_fmt or "parquet"
         ext = "avro" if fmt == "avro-py" else fmt
         loc = self.layout.loc(self.layout.records_key(task, ext=ext))
         path = loc.uri()

@@ -1,6 +1,6 @@
 """Pure-Python Avro Object Container File implementation: spec-level
 byte checks (zigzag varints, header framing, sync markers), both
-codecs, null handling, and the distributed mapInPandas read/write
+codecs, null handling, and the distributed mapInArrow read/write
 round trip. This closes the reference-parity gap (its records zone IS
 Avro-with-deflate) without the absent spark-avro jar."""
 
@@ -92,11 +92,12 @@ def test_union_branch_follows_declared_order():
     # inverted-branch bug that wrote ["null",T] bytes under a
     # [T,"null"] schema.
     sch = T.StructType([T.StructField("name", T.StringType(), True)])
+    enc = AC._field_encoder(sch)
     val = bytearray()
-    AC.encode_record(sch, {"name": "x"}, val)
+    enc({"name": "x"}, val)
     assert bytes(val) == b"\x00\x02x"  # branch 0, len 1, 'x'
     nul = bytearray()
-    AC.encode_record(sch, {"name": None}, nul)
+    enc({"name": None}, nul)
     assert bytes(nul) == b"\x02"  # branch 1 = null, no payload
 
 
@@ -247,13 +248,14 @@ def test_array_block_encoding_spec_bytes():
     sch = T.StructType(
         [T.StructField("xs", T.ArrayType(T.LongType(), False), False)]
     )
+    enc = AC._field_encoder(sch)
     out = bytearray()
-    AC.encode_record(sch, {"xs": [1, 2]}, out)
+    enc({"xs": [1, 2]}, out)
     assert bytes(out) == b"\x04\x02\x04\x00"  # count=2, zz(1), zz(2), end
     empty = bytearray()
-    AC.encode_record(sch, {"xs": []}, empty)
+    enc({"xs": []}, empty)
     assert bytes(empty) == b"\x00"
-    back, pos = AC.decode_record(sch, memoryview(bytes(out)), 0)
+    back, pos = AC._field_decoder(sch)(memoryview(bytes(out)), 0)
     assert back == {"xs": [1, 2]} and pos == 4
 
 
@@ -378,3 +380,32 @@ def test_distributed_declared_schema_roundtrip(spark, tmp_path):
     back = AC.read_avro(spark, out)
     got = {(r.id, r.status, bytes(r.tag)) for r in back.collect()}
     assert got == {(1, "OK", b"AAAA"), (2, "FAIL", b"\x00\x01\x02\x03")}
+
+
+def test_empty_write_keeps_declared_schema(spark, tmp_path):
+    """An empty dataset still writes one header-only container; its
+    embedded schema must be the DECLARED JSON (names, namespace, enum
+    symbols — the fingerprint source), not the StructType-derived one."""
+    import json
+
+    from hyppo_worker_spark.sources.avro_schema import avro_to_struct
+
+    declared = json.dumps({
+        "type": "record", "name": "Doc", "namespace": "x.y",
+        "fields": [
+            {"name": "id", "type": "long"},
+            {"name": "kind",
+             "type": {"type": "enum", "name": "Kind",
+                      "symbols": ["A", "B"]}},
+        ],
+    })
+    df = spark.createDataFrame([], avro_to_struct(declared))
+    out = str(tmp_path / "empty")
+    assert AC.write_avro(df, out, declared_schema=declared) == 0
+    with open(out + "/part-empty.avro", "rb") as fh:
+        blob = fh.read()
+    header = AC.MAGIC + AC._enc_meta_map(
+        {"avro.schema": declared.encode(), "avro.codec": b"deflate"}
+    )
+    assert blob.startswith(header)
+    assert AC.read_avro(spark, out).count() == 0

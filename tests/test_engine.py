@@ -180,6 +180,24 @@ def test_multi_slot_response_chained_pipeline(spark, storage):
     assert not any(isinstance(r, FailureResponse) for r in eng.results_log)
 
 
+def test_multi_slot_drain_reraises_slot_exception(spark, storage):
+    """A response callback that raises inside a slot thread must reach
+    the run_until_idle caller, as it does with one slot — not die with
+    the thread while the drain returns normally."""
+    registry = IntegrationRegistry()
+    stub = ProcessedDataStub()
+    registry.register(stub)
+    eng = HyppoEngine(spark, registry, storage, EngineConfig(worker_count=2))
+
+    @eng.responses.on_completed
+    def boom(resp):
+        raise RuntimeError("callback failed")
+
+    eng.submit(ValidateIntegrationRequest(integration=stub.details()))
+    with pytest.raises(RuntimeError, match="callback failed"):
+        eng.run_until_idle()
+
+
 def test_status_updates_and_slot_fsm(engine):
     stub = ProcessedDataStub()
     engine.registry.register(stub)
