@@ -20,4 +20,10 @@ Everything here is built only from public knowledge: the Apache Spark
 API and the reference repository's observable behavior.
 """
 
+from hyppo_worker_spark import _zipimport
+
+# Spark's Python workers import the package when they unpickle engine
+# code, so a reused worker stops re-reading pyspark.zip on every task.
+_zipimport.install()
+
 __version__ = "0.1.0"

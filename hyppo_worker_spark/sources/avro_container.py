@@ -62,7 +62,8 @@ Distributed use (no driver bottleneck):
 - **write**: ``write_avro(df, path)`` — each Spark partition encodes
   its rows to one ``part-*.avro`` file via ``mapInArrow`` (Arrow
   batches in, one container per task), exactly how the per-task
-  records zone lays files out;
+  records zone lays files out. Part files are named by partition id
+  (``part-00003.avro``), so a re-run partition replaces its file;
 - **read**: ``read_avro(spark, path)`` — ``binaryFile`` scan +
   ``mapInArrow`` decode, schema recovered from each file's own
   header and validated against the expected StructType. Without an
@@ -92,7 +93,6 @@ import json
 import lzma as _lzma
 import os
 import struct
-import uuid
 import zlib
 from collections.abc import Iterator
 from decimal import Decimal as _Decimal
@@ -720,15 +720,19 @@ def write_avro(
     declared_schema: str | dict | None = None,
 ) -> int:
     """Distributed container write: each partition encodes its rows to
-    one ``part-*.avro`` file (the per-task file layout of the records
-    zone). Executor-side file IO — no driver collect of row data.
-    Returns the total record count (observed from the write itself,
-    like the Observation on the jar path).
+    one ``part-{partition:05d}.avro`` file (the per-task file layout of
+    the records zone), so a retried or speculative attempt of a
+    partition replaces its file instead of adding a second one.
+    Executor-side file IO — no driver collect of row data. Returns the
+    total record count, summed on the driver from the per-partition
+    counts the write itself yields (one Spark job, no aggregate
+    shuffle), like the Observation on the jar path.
 
     Arrow-native (``mapInArrow``): a pandas hop would widen nullable
     int64 columns to float64 and silently round ids above 2^53 —
     ``RecordBatch.to_pylist`` keeps exact ints and real ``None``."""
     import pyarrow as pa
+    from pyspark import TaskContext
 
     schema = df.schema
     os.makedirs(path, exist_ok=True)
@@ -742,8 +746,9 @@ def write_avro(
                 schema, rows, codec=codec,
                 declared_schema=declared_schema,
             )
-            name = f"part-{uuid.uuid4().hex}.avro"
-            tmp = os.path.join(path, "." + name + ".tmp")
+            ctx = TaskContext.get()
+            name = f"part-{ctx.partitionId():05d}.avro"
+            tmp = os.path.join(path, f".{name}.{ctx.taskAttemptId()}.tmp")
             with open(tmp, "wb") as fh:
                 fh.write(blob)
             os.replace(tmp, os.path.join(path, name))
@@ -753,9 +758,7 @@ def write_avro(
             )
 
     # one pass; the tiny (n) batch per task forces execution
-    total = (
-        df.mapInArrow(enc, "n long").agg({"n": "sum"}).collect()[0][0] or 0
-    )
+    total = sum(r.n for r in df.mapInArrow(enc, "n long").collect())
     if not any(f.endswith(".avro") for f in os.listdir(path)):
         # empty dataset: one header-only container so readers see the
         # schema (mirrors the jar path's empty part file)

@@ -10,7 +10,8 @@ Key scheme preserved from ``worker/src/main/scala/com/harrys/hyppo/worker/data/S
 Uploads record size + MD5 (:62-69, :146-148); downloads verify the
 checksum against the manifest (:138-144). Record files are written
 in the handler's ``records_fmt`` (parquet by default; ``avro-py`` is
-the pure-Python Avro container, ``avro`` the spark-avro jar). Avro
+the pure-Python Avro container, written as ONE file per task like the
+reference's records file; ``avro`` the spark-avro jar). Avro
 record files read back through the jar when it is present (probed
 once per session) and through the pure-Python reader otherwise. Raw
 files are opaque gzipped blobs, read back via Spark's ``binaryFile``
@@ -103,15 +104,12 @@ class DataFileHandler:
     ):
         self.spark = spark
         self.layout = layout
-        # Records-zone format policy: the INTERNAL zone defaults to
-        # parquet — columnar scans are what a 100 TB engine wants for
-        # its own intermediate storage (the python avro row codec
-        # costs ~5x wall on the p01 volume; measured this round).
-        # Avro remains the EDGE/interchange format: pass
+        # Records-zone format: parquet by default (columnar scans for
+        # the engine's own intermediate storage, encoded in the JVM).
         # records_fmt="avro-py" (jar-free pure-Python container,
-        # sources/avro_container.py) or "avro" (jar) to persist the
-        # reference's actual wire format — p02's driver row runs the
-        # avro-py plane end-to-end every round.
+        # sources/avro_container.py) or "avro" (jar) persists the
+        # reference's actual wire format; the benchmark's raw_ingest
+        # workload runs the avro-py path.
         self.records_fmt = records_fmt
 
     # -- raw files (opaque bytes, gzipped at rest) ---------------------
@@ -165,7 +163,9 @@ class DataFileHandler:
             from hyppo_worker_spark.sources.avro_container import write_avro
 
             shutil.rmtree(path, ignore_errors=True)
-            record_count = write_avro(df, path, codec="deflate")
+            # One records file per task, as the reference writes it: the
+            # connector's parse and the encoder share one Spark task.
+            record_count = write_avro(df.coalesce(1), path, codec="deflate")
         else:
             from pyspark.sql import Observation
             from pyspark.sql import functions as F

@@ -243,6 +243,26 @@ def test_distributed_round_trip_with_nulls(spark, tmp_path):
         AC.read_avro(spark, out, expected=other).collect()
 
 
+def test_rerun_partition_replaces_its_file(spark, tmp_path):
+    """Part files are named by partition id, so writing a partition
+    again (a retried or speculative task attempt) replaces its file
+    instead of adding a second copy of its rows."""
+    import os
+
+    df = spark.range(0, 30, 1, 3).selectExpr(
+        "id", "CAST(id AS STRING) AS name", "id * 0.5 AS score", "id % 2 = 0 AS ok"
+    )
+    out = str(tmp_path / "rerun")
+    assert AC.write_avro(df, out) == 30
+    first = sorted(os.listdir(out))
+    assert AC.write_avro(df, out) == 30
+    assert sorted(os.listdir(out)) == first == [
+        "part-00000.avro", "part-00001.avro", "part-00002.avro"
+    ]
+    ids = [r.id for r in AC.read_avro(spark, out).collect()]
+    assert sorted(ids) == list(range(30))
+
+
 def test_array_block_encoding_spec_bytes():
     # spec: array = blocks of (zigzag count, items...), zero-count end
     sch = T.StructType(

@@ -89,6 +89,36 @@ def test_records_zone_avro_py_roundtrip(spark, storage):
     assert sorted(r.name for r in back.collect()) == ["a", "b", "c"]
 
 
+def test_avro_py_records_write_is_one_file_and_one_job(spark, storage):
+    """An avro-py records write is one file per task, written and
+    counted by ONE Spark job (no aggregate shuffle for the count)."""
+    import glob as g
+    import os
+
+    from hyppo_worker_spark.storage import DataFileHandler
+
+    h = DataFileHandler(spark, storage.layout, records_fmt="avro-py")
+    df = spark.range(0, 30, 1, 3).selectExpr(
+        "concat('n', id) AS name", "CAST(id AS INT) AS valueOne", "id * 10 AS valueTwo"
+    )
+    sc = spark.sparkContext
+    group = "avro-py-records-write"
+    sc.setJobGroup(group, group)
+    try:
+        manifest = h.write_records(_task(), df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    parts = g.glob(os.path.join(manifest.location.uri(), "part-*.avro"))
+    assert len(parts) == 1
+    assert manifest.record_count == 30
+    back = h.read_records(manifest)
+    assert sorted((r.name, r.valueOne, r.valueTwo) for r in back.collect()) == sorted(
+        (f"n{i}", i, i * 10) for i in range(30)
+    )
+
+
 def test_records_checksum_detects_tamper(spark, storage):
     t = _task()
     df = spark.createDataFrame([("a", 1, 10)], TEST_RECORD_SCHEMA)
