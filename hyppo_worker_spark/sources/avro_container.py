@@ -62,8 +62,10 @@ Distributed use (no driver bottleneck):
 - **write**: ``write_avro(df, path)`` — each Spark partition encodes
   its rows to one ``part-*.avro`` file via ``mapInArrow`` (Arrow
   batches in, one container per task), exactly how the per-task
-  records zone lays files out. Part files are named by partition id
-  (``part-00003.avro``), so a re-run partition replaces its file;
+  records zone lays files out, streamed block by block. Part files
+  are named by partition id and a per-call token
+  (``part-00003-<token>.avro``), so a re-run partition replaces its
+  file and separate writes into one directory do not collide;
 - **read**: ``read_avro(spark, path)`` — ``binaryFile`` scan +
   ``mapInArrow`` decode, schema recovered from each file's own
   header and validated against the expected StructType. Without an
@@ -94,8 +96,9 @@ import lzma as _lzma
 import os
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from decimal import Decimal as _Decimal
+from uuid import uuid4
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -567,7 +570,27 @@ def write_container(
     block_records: int = 4096,
     declared_schema: str | dict | None = None,
 ) -> bytes:
-    """One Avro Object Container File as bytes.
+    """One Avro Object Container File as bytes (``iter_container``
+    joined)."""
+    return b"".join(
+        iter_container(
+            schema, rows, codec=codec, block_records=block_records,
+            declared_schema=declared_schema,
+        )
+    )
+
+
+def iter_container(
+    schema: T.StructType,
+    rows: Iterable[dict],
+    codec: str = "deflate",
+    block_records: int = 4096,
+    declared_schema: str | dict | None = None,
+) -> Iterator[bytes]:
+    """One Avro Object Container File as a stream of byte chunks: the
+    header, then one chunk per block of ``block_records`` rows. Only
+    one block's rows are held at a time, so a writer's memory does not
+    grow with its input.
 
     ``declared_schema`` (Avro record schema JSON) makes this a
     SCHEMA-PRESERVING writer: the declared JSON is embedded verbatim
@@ -616,20 +639,12 @@ def write_container(
         nb = null_branch_indices(schema_json)
         special = special_codecs(schema_json)
     sync = _sync_marker(schema_json)
-    out = bytearray()
-    out += MAGIC
-    out += _enc_meta_map(
+    yield MAGIC + _enc_meta_map(
         {"avro.schema": schema_json.encode(), "avro.codec": codec.encode()}
-    )
-    out += sync
+    ) + sync
     enc_row = _field_encoder(schema, nb, "", special)
-    i = 0
-    while i < len(rows):
-        chunk = rows[i : i + block_records]
-        i += block_records
-        payload = bytearray()
-        for r in chunk:
-            enc_row(r, payload)
+
+    def block(n: int, payload: bytearray) -> bytes:
         body = bytes(payload)
         if codec == "deflate":
             # RFC-1951 raw deflate (no zlib wrapper) per the spec
@@ -638,17 +653,36 @@ def write_container(
             body = _bz2.compress(body)
         elif codec == "xz":
             body = _lzma.compress(body, format=_lzma.FORMAT_XZ)
-        out += zigzag_encode(len(chunk))
-        out += zigzag_encode(len(body))
-        out += body
-        out += sync
-    return bytes(out)
+        return zigzag_encode(n) + zigzag_encode(len(body)) + body + sync
+
+    payload = bytearray()
+    n = 0
+    for r in rows:
+        enc_row(r, payload)
+        n += 1
+        if n == block_records:
+            yield block(n, payload)
+            payload = bytearray()
+            n = 0
+    if n:
+        yield block(n, payload)
 
 
 def read_container(
     data: bytes, reader_schema: str | dict | None = None
 ) -> tuple[T.StructType, str, list[dict]]:
-    """Decode one container file → (schema, codec, rows).
+    """Decode one container file → (schema, codec, rows); the rows of
+    ``container_blocks`` in one list."""
+    schema, codec, blocks = container_blocks(data, reader_schema)
+    return schema, codec, [r for rows in blocks for r in rows]
+
+
+def container_blocks(
+    data: bytes, reader_schema: str | dict | None = None
+) -> tuple[T.StructType, str, Iterator[list[dict]]]:
+    """Parse one container file's header → (schema, codec, an iterator
+    of each block's decoded rows). Blocks decode as the iterator is
+    consumed, so a reader holds one block's rows at a time.
 
     With ``reader_schema`` (Avro record schema JSON), rows are decoded
     under the file's own WRITER schema and then resolved to the
@@ -673,31 +707,7 @@ def read_container(
     dec_row = _field_decoder(
         schema, null_branch_indices(schema_json), "", special_codecs(schema_json)
     )
-    rows: list[dict] = []
-    while pos < len(buf):
-        count, pos = zigzag_decode(buf, pos)
-        size, pos = zigzag_decode(buf, pos)
-        body = bytes(buf[pos : pos + size])
-        pos += size
-        if codec == "deflate":
-            body = zlib.decompress(body, wbits=-15)
-        elif codec == "bzip2":
-            body = _bz2.decompress(body)
-        elif codec == "xz":
-            body = _lzma.decompress(body)
-        elif codec != "null":
-            # snappy / zstandard need libraries absent from this
-            # environment (probed every round) — fail loud
-            raise ValueError(f"unsupported avro codec {codec}")
-        bview = memoryview(body)
-        bpos = 0
-        append = rows.append
-        for _ in range(count):
-            row, bpos = dec_row(bview, bpos)
-            append(row)
-        if bytes(buf[pos : pos + 16]) != sync:
-            raise ValueError("sync marker mismatch — corrupt container")
-        pos += 16
+    conv = None
     if reader_schema is not None:
         reader_json = (
             reader_schema
@@ -705,9 +715,37 @@ def read_container(
             else json.dumps(reader_schema)
         )
         conv = schema_resolver(schema_json, reader_json)
-        rows = [conv(r) for r in rows]
         schema = avro_to_struct(reader_json)
-    return schema, codec, rows
+
+    def blocks(pos: int) -> Iterator[list[dict]]:
+        while pos < len(buf):
+            count, pos = zigzag_decode(buf, pos)
+            size, pos = zigzag_decode(buf, pos)
+            body = bytes(buf[pos : pos + size])
+            pos += size
+            if codec == "deflate":
+                body = zlib.decompress(body, wbits=-15)
+            elif codec == "bzip2":
+                body = _bz2.decompress(body)
+            elif codec == "xz":
+                body = _lzma.decompress(body)
+            elif codec != "null":
+                # snappy / zstandard need libraries absent from this
+                # environment (probed every round) — fail loud
+                raise ValueError(f"unsupported avro codec {codec}")
+            bview = memoryview(body)
+            bpos = 0
+            rows: list[dict] = []
+            append = rows.append
+            for _ in range(count):
+                row, bpos = dec_row(bview, bpos)
+                append(row)
+            if bytes(buf[pos : pos + 16]) != sync:
+                raise ValueError("sync marker mismatch — corrupt container")
+            pos += 16
+            yield rows if conv is None else [conv(r) for r in rows]
+
+    return schema, codec, blocks(pos)
 
 
 # -- distributed read/write ----------------------------------------------
@@ -719,43 +757,59 @@ def write_avro(
     codec: str = "deflate",
     declared_schema: str | dict | None = None,
 ) -> int:
-    """Distributed container write: each partition encodes its rows to
-    one ``part-{partition:05d}.avro`` file (the per-task file layout of
-    the records zone), so a retried or speculative attempt of a
-    partition replaces its file instead of adding a second one.
-    Executor-side file IO — no driver collect of row data. Returns the
-    total record count, summed on the driver from the per-partition
-    counts the write itself yields (one Spark job, no aggregate
-    shuffle), like the Observation on the jar path.
+    """Distributed container write: each non-empty partition encodes
+    its rows to one ``part-{partition:05d}-{write}.avro`` file (the
+    per-task file layout of the records zone), where ``write`` is a
+    token drawn once per call on the driver. A retried or speculative
+    attempt of a partition therefore replaces its file instead of
+    adding a second one, while separate calls into one directory add
+    files side by side (a zone written across schema versions);
+    replacing a dataset means clearing its directory first, as
+    ``DataFileHandler.write_records`` does. Rows stream through
+    ``iter_container`` block by block, so a task holds one Arrow batch
+    and one Avro block, not its partition. Executor-side file IO — no
+    driver collect of row data. Returns the total record count,
+    summed on the driver from the per-partition counts the write
+    itself yields (one Spark job, no aggregate shuffle), like the
+    Observation on the jar path.
 
     Arrow-native (``mapInArrow``): a pandas hop would widen nullable
     int64 columns to float64 and silently round ids above 2^53 —
     ``RecordBatch.to_pylist`` keeps exact ints and real ``None``."""
+    import itertools
+
     import pyarrow as pa
     from pyspark import TaskContext
 
     schema = df.schema
+    token = uuid4().hex
     os.makedirs(path, exist_ok=True)
 
     def enc(it: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        rows: list[dict] = []
-        for batch in it:
-            rows.extend(batch.to_pylist())
-        if rows:
-            blob = write_container(
-                schema, rows, codec=codec,
-                declared_schema=declared_schema,
-            )
-            ctx = TaskContext.get()
-            name = f"part-{ctx.partitionId():05d}.avro"
-            tmp = os.path.join(path, f".{name}.{ctx.taskAttemptId()}.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(blob)
-            os.replace(tmp, os.path.join(path, name))
-            yield pa.RecordBatch.from_pylist(
-                [{"n": len(rows)}],
-                schema=pa.schema([pa.field("n", pa.int64())]),
-            )
+        batches = (b for b in it if b.num_rows)
+        first = next(batches, None)
+        if first is None:
+            return
+        n = 0
+
+        def rows() -> Iterator[dict]:
+            nonlocal n
+            for batch in itertools.chain([first], batches):
+                n += batch.num_rows
+                yield from batch.to_pylist()
+
+        ctx = TaskContext.get()
+        name = f"part-{ctx.partitionId():05d}-{token}.avro"
+        tmp = os.path.join(path, f".{name}.{ctx.taskAttemptId()}.tmp")
+        with open(tmp, "wb") as fh:
+            for chunk in iter_container(
+                schema, rows(), codec=codec, declared_schema=declared_schema
+            ):
+                fh.write(chunk)
+        os.replace(tmp, os.path.join(path, name))
+        yield pa.RecordBatch.from_pylist(
+            [{"n": n}], schema=pa.schema([pa.field("n", pa.int64())])
+        )
 
     # one pass; the tiny (n) batch per task forces execution
     total = sum(r.n for r in df.mapInArrow(enc, "n long").collect())
@@ -836,7 +890,8 @@ def read_avro(
             for r in batch.to_pylist():
                 # with reader_json, each file resolves from its OWN
                 # writer schema to the reader's, whose StructType is exp
-                schema, _codec, rows = read_container(
+                # (one Arrow batch per Avro block)
+                schema, _codec, blocks = container_blocks(
                     bytes(r["content"]), reader_schema=reader_json
                 )
                 if schema != exp:
@@ -844,8 +899,9 @@ def read_avro(
                         f"avro schema mismatch in {r['path']}: "
                         f"{schema} != {exp}"
                     )
-                if rows:
-                    yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+                for rows in blocks:
+                    if rows:
+                        yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
     return bin_df.mapInArrow(dec, exp)
 

@@ -164,7 +164,11 @@ class DataFileHandler:
 
             shutil.rmtree(path, ignore_errors=True)
             # One records file per task, as the reference writes it: the
-            # connector's parse and the encoder share one Spark task.
+            # connector's parse (or fetch) and the encoder share one
+            # Spark task, so an item is sized for one task, as a
+            # reference executor handles one task's files in turn;
+            # parallelism comes from the work slots. The encoder streams
+            # block by block, so its memory does not grow with the item.
             record_count = write_avro(df.coalesce(1), path, codec="deflate")
         else:
             from pyspark.sql import Observation

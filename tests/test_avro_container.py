@@ -6,6 +6,7 @@ Avro-with-deflate) without the absent spark-avro jar."""
 
 from __future__ import annotations
 
+import uuid
 import zlib
 
 import pytest
@@ -243,12 +244,15 @@ def test_distributed_round_trip_with_nulls(spark, tmp_path):
         AC.read_avro(spark, out, expected=other).collect()
 
 
-def test_rerun_partition_replaces_its_file(spark, tmp_path):
-    """Part files are named by partition id, so writing a partition
-    again (a retried or speculative task attempt) replaces its file
-    instead of adding a second copy of its rows."""
+def test_rerun_partition_replaces_its_file(spark, tmp_path, monkeypatch):
+    """Part files are named by partition id and a token drawn once per
+    write_avro call, so writing a partition again within one call (a
+    retried or speculative task attempt, simulated by re-drawing the
+    same token) replaces its file instead of adding a second copy of
+    its rows."""
     import os
 
+    monkeypatch.setattr(AC, "uuid4", lambda: uuid.UUID(int=7))
     df = spark.range(0, 30, 1, 3).selectExpr(
         "id", "CAST(id AS STRING) AS name", "id * 0.5 AS score", "id % 2 = 0 AS ok"
     )
@@ -256,11 +260,62 @@ def test_rerun_partition_replaces_its_file(spark, tmp_path):
     assert AC.write_avro(df, out) == 30
     first = sorted(os.listdir(out))
     assert AC.write_avro(df, out) == 30
+    token = uuid.UUID(int=7).hex
     assert sorted(os.listdir(out)) == first == [
-        "part-00000.avro", "part-00001.avro", "part-00002.avro"
+        f"part-{p:05d}-{token}.avro" for p in range(3)
     ]
     ids = [r.id for r in AC.read_avro(spark, out).collect()]
     assert sorted(ids) == list(range(30))
+
+
+def test_separate_writes_into_one_directory_keep_all_rows(spark, tmp_path):
+    """Two write_avro calls with the same partition count into one
+    directory (a zone written across schema versions) add files side
+    by side; neither replaces the other's."""
+    import os
+
+    out = str(tmp_path / "two-writes")
+    a = spark.range(0, 30, 1, 3).selectExpr("id", "CAST(id AS STRING) AS name")
+    b = spark.range(100, 130, 1, 3).selectExpr("id", "CAST(id AS STRING) AS name")
+    assert AC.write_avro(a, out) == 30
+    assert AC.write_avro(b, out) == 30
+    assert len([f for f in os.listdir(out) if f.endswith(".avro")]) == 6
+    ids = sorted(r.id for r in AC.read_avro(spark, out).collect())
+    assert ids == list(range(30)) + list(range(100, 130))
+
+
+def test_container_streams_blocks(spark, tmp_path):
+    """iter_container yields the header, then one chunk per block, and
+    joins to write_container's bytes; a file written through write_avro
+    from several Arrow batches is byte-identical to write_container over
+    the same rows, and container_blocks decodes it one block at a time."""
+    import os
+
+    sch = T.StructType([T.StructField("id", T.LongType())])
+    rows = [{"id": i} for i in range(10)]
+    chunks = list(AC.iter_container(sch, iter(rows), block_records=4))
+    assert len(chunks) == 1 + 3
+    assert b"".join(chunks) == AC.write_container(sch, rows, block_records=4)
+    schema, codec, blocks = AC.container_blocks(b"".join(chunks))
+    assert (schema, codec) == (sch, "deflate")
+    assert [len(b) for b in blocks] == [4, 4, 2]
+
+    n = 5000  # more rows than one Avro block, in several Arrow batches
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1000")
+    try:
+        df = spark.range(0, n, 1, 1).selectExpr("id", "CAST(id AS STRING) AS name")
+        out = str(tmp_path / "streamed")
+        assert AC.write_avro(df, out) == n
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    (part,) = os.listdir(out)
+    with open(os.path.join(out, part), "rb") as fh:
+        data = fh.read()
+    want = [{"id": i, "name": str(i)} for i in range(n)]
+    assert data == AC.write_container(df.schema, want)
+    assert [len(b) for b in AC.container_blocks(data)[2]] == [4096, n - 4096]
+    back = AC.read_avro(spark, out)
+    assert sorted(r.id for r in back.collect()) == list(range(n))
 
 
 def test_array_block_encoding_spec_bytes():

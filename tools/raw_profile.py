@@ -35,49 +35,21 @@ from collections import defaultdict
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-_TICK = os.sysconf("SC_CLK_TCK")
 PARTS = ("driver", "jvm", "python")
 
 
-def _proc(pid: str) -> tuple[int, str, int, int]:
-    """(parent pid, command name, own CPU ticks, reaped children's ticks)."""
-    with open(f"/proc/{pid}/stat") as fh:
-        s = fh.read()
-    comm = s[s.index("(") + 1 : s.rindex(")")]
-    f = s[s.rindex(")") + 2 :].split()
-    return int(f[1]), comm, int(f[11]) + int(f[12]), int(f[13]) + int(f[14])
+def cpu_split(jvm_pid: int) -> dict[str, float]:
+    """CPU seconds of this process (driver), the Spark JVM it launched
+    and the JVM's descendants (Python workers and their daemon), from
+    the benchmark's process-tree accounting (``perfbench.cputime``).
+    A process's ticks include the children it has reaped, so a Python
+    daemon the JVM reaped counts as JVM time."""
+    from perfbench.cputime import _TICK, _stat, tree_cpu_s
 
-
-def cpu_split() -> dict[str, float]:
-    """CPU seconds of this process (driver), its Java descendants (the
-    JVM) and every other descendant (Python workers and their daemon).
-    Ticks of reaped children go to the child's side: a Java process
-    reaps Python daemons, a Python daemon reaps its workers."""
-    procs = {}
-    for d in os.listdir("/proc"):
-        if d.isdigit():
-            try:
-                procs[int(d)] = _proc(d)
-            except (OSError, ValueError, IndexError):
-                continue  # the process ended while we listed it
-    children: dict[int, list[int]] = defaultdict(list)
-    for pid, (ppid, *_) in procs.items():
-        children[ppid].append(pid)
-    me = os.getpid()
-    _, _, own, reaped = procs[me]
-    out = dict.fromkeys(PARTS, 0)
-    out["driver"] = own + reaped
-    todo = list(children[me])
-    while todo:
-        pid = todo.pop()
-        _, comm, own, reaped = procs[pid]
-        if comm == "java":
-            out["jvm"] += own
-            out["python"] += reaped
-        else:
-            out["python"] += own + reaped
-        todo += children[pid]
-    return {k: v / _TICK for k, v in out.items()}
+    # innermost first, so no part comes out negative
+    jvm = _stat(str(jvm_pid))[1] / _TICK
+    jvm_tree = tree_cpu_s(jvm_pid)
+    return {"driver": tree_cpu_s() - jvm_tree, "jvm": jvm, "python": jvm_tree - jvm}
 
 
 def main() -> int:
@@ -112,6 +84,7 @@ def _profile(spark, args, work: str) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
     tracker = sc.statusTracker()
+    jvm_pid = sc._gateway.proc.pid  # noqa: SLF001 — the JVM this process launched
     items: list[tuple[str, list[int], dict[str, float], float]] = []
     profiling = False
     run_operation = scheduler_mod.run_operation
@@ -120,11 +93,11 @@ def _profile(spark, args, work: str) -> int:
         if not profiling:
             return run_operation(spark, registry, handler, item, **kw)
         group = sc.getLocalProperty("spark.jobGroup.id")
-        cpu0, t0 = cpu_split(), time.monotonic()
+        cpu0, t0 = cpu_split(jvm_pid), time.monotonic()
         try:
             return run_operation(spark, registry, handler, item, **kw)
         finally:
-            wall, cpu = time.monotonic() - t0, cpu_split()
+            wall, cpu = time.monotonic() - t0, cpu_split(jvm_pid)
             jobs = sorted(tracker.getJobIdsForGroup(group)) if group else []
             items.append(
                 (item.operation.value, jobs, {k: cpu[k] - cpu0[k] for k in PARTS}, wall)
@@ -141,9 +114,9 @@ def _profile(spark, args, work: str) -> int:
         for _ in range(args.warm):
             wl.coordinator.run(0)
         profiling = True
-        cpu0 = cpu_split()
+        cpu0 = cpu_split(jvm_pid)
         records = sum(wl.coordinator.run(0).records for _ in range(args.rounds))
-        total = {k: v - cpu0[k] for k, v in cpu_split().items()}
+        total = {k: v - cpu0[k] for k, v in cpu_split(jvm_pid).items()}
         profiling = False
     finally:
         scheduler_mod.run_operation = run_operation
