@@ -272,17 +272,22 @@ def run_operation(
     operation is uploaded to the log zone and attached to the response
     as ``log_file`` — the analog of the reference's per-task stdout
     rotation + upload (``TaskSpecificLogging.java:34-48``,
-    ``CommanderActor.uploadLogFuture:292-315``).
+    ``CommanderActor.uploadLogFuture:292-315``). The handler sits on the
+    root logger, which every work slot shares, so it keeps only the
+    records logged on this thread: concurrent slots' lines stay out.
     """
     import dataclasses
     import io
     import logging
+    import threading
 
     buf = io.StringIO()
     log_handler = logging.StreamHandler(buf)
     log_handler.setFormatter(
         logging.Formatter("%(asctime)s %(levelname)s %(name)s %(message)s")
     )
+    slot_thread = threading.get_ident()
+    log_handler.addFilter(lambda record: record.thread == slot_thread)
     logging.getLogger().addHandler(log_handler)
 
     def emit(phase: str, **detail) -> None:

@@ -240,3 +240,52 @@ def test_failure_log_records_exception(spark, storage):
     assert resp.log_file is not None
     with open(resp.log_file.location.uri()) as f:
         assert "RuntimeError: kaput" in f.read()
+
+
+def test_concurrent_executions_keep_their_own_log_lines(tmp_path):
+    """Two slots run operations at once; each uploaded log holds only
+    the lines its own connector logged."""
+    import logging
+    import threading
+
+    from hyppo_worker_spark.storage import DataFileHandler, StorageLayout
+
+    barrier = threading.Barrier(2, timeout=30)
+
+    def chatty(name):
+        class Chatty(ProcessedDataStub):
+            source_name = name
+
+            def create_tasks(self, job):
+                for i in range(3):
+                    logging.getLogger("connector").warning("%s-line-%d", name, i)
+                    barrier.wait()  # the other slot logs in between
+                return [{}]
+
+        return Chatty()
+
+    stubs = [chatty("SlotA"), chatty("SlotB")]
+    registry = IntegrationRegistry()
+    for stub in stubs:
+        registry.register(stub)
+    handler = DataFileHandler(None, StorageLayout(bucket=str(tmp_path)))
+    responses = {}
+
+    def run(stub):
+        job = DataIngestionJob(source=IngestionSource(name=stub.source_name))
+        item = CreateIngestionTasksRequest(integration=stub.details(), job=job)
+        responses[stub.source_name] = run_operation(None, registry, handler, item)
+
+    threads = [threading.Thread(target=run, args=(stub,)) for stub in stubs]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(60)
+        assert not t.is_alive()
+    for own, other in (("SlotA", "SlotB"), ("SlotB", "SlotA")):
+        resp = responses[own]
+        assert resp.log_file is not None
+        with open(resp.log_file.location.uri()) as f:
+            content = f.read()
+        assert [f"{own}-line-{i}" in content for i in range(3)] == [True] * 3
+        assert other not in content

@@ -14,6 +14,10 @@ per-attempt Spark job group, which attributes every job it launches
 (AQE query-stage jobs included) to it. Validation and ``--warm``
 rounds run unprofiled first; a round is one job per integration.
 
+``jit_s`` is HotSpot's compile time over the same window
+(``CompilationMXBean.getTotalCompilationTime``), part of the JVM's CPU:
+compiler threads come and go, so per-thread sampling misses it.
+
 Usage: python tools/raw_profile.py [--seed 1] [--rounds 4] [--warm 2]
        [--list]
 
@@ -52,6 +56,13 @@ def cpu_split(jvm_pid: int) -> dict[str, float]:
     return {"driver": tree_cpu_s() - jvm_tree, "jvm": jvm, "python": jvm_tree - jvm}
 
 
+def jit_s(sc) -> float:
+    """Seconds the JVM's JIT compilers have spent compiling so far.
+    Compiler threads are CPU-bound, so this is (a part of) JVM CPU."""
+    mx = sc._jvm.java.lang.management.ManagementFactory  # noqa: SLF001
+    return mx.getCompilationMXBean().getTotalCompilationTime() / 1000
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--seed", type=int, default=1)
@@ -85,7 +96,7 @@ def _profile(spark, args, work: str) -> int:
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     jvm_pid = sc._gateway.proc.pid  # noqa: SLF001 — the JVM this process launched
-    items: list[tuple[str, list[int], dict[str, float], float]] = []
+    items: list[tuple[str, list[int], dict[str, float], float, float]] = []
     profiling = False
     run_operation = scheduler_mod.run_operation
 
@@ -93,14 +104,14 @@ def _profile(spark, args, work: str) -> int:
         if not profiling:
             return run_operation(spark, registry, handler, item, **kw)
         group = sc.getLocalProperty("spark.jobGroup.id")
-        cpu0, t0 = cpu_split(jvm_pid), time.monotonic()
+        cpu0, jit0, t0 = cpu_split(jvm_pid), jit_s(sc), time.monotonic()
         try:
             return run_operation(spark, registry, handler, item, **kw)
         finally:
-            wall, cpu = time.monotonic() - t0, cpu_split(jvm_pid)
+            wall, cpu, jit = time.monotonic() - t0, cpu_split(jvm_pid), jit_s(sc) - jit0
             jobs = sorted(tracker.getJobIdsForGroup(group)) if group else []
             items.append(
-                (item.operation.value, jobs, {k: cpu[k] - cpu0[k] for k in PARTS}, wall)
+                (item.operation.value, jobs, {k: cpu[k] - cpu0[k] for k in PARTS}, jit, wall)
             )
 
     scheduler_mod.run_operation = profiled
@@ -114,9 +125,10 @@ def _profile(spark, args, work: str) -> int:
         for _ in range(args.warm):
             wl.coordinator.run(0)
         profiling = True
-        cpu0 = cpu_split(jvm_pid)
+        cpu0, jit0 = cpu_split(jvm_pid), jit_s(sc)
         records = sum(wl.coordinator.run(0).records for _ in range(args.rounds))
         total = {k: v - cpu0[k] for k, v in cpu_split(jvm_pid).items()}
+        total_jit = jit_s(sc) - jit0
         profiling = False
     finally:
         scheduler_mod.run_operation = run_operation
@@ -129,26 +141,28 @@ def _profile(spark, args, work: str) -> int:
         return len(sids), tasks, stages[-1].name if stages and stages[-1] else "?"
 
     by_op: dict[str, list] = defaultdict(list)
-    for op, jobs, cpu, wall in items:
-        by_op[op].append((jobs, cpu, wall))
+    for op, jobs, cpu, jit, wall in items:
+        by_op[op].append((jobs, cpu, jit, wall))
     print(f"{records} records, {args.rounds} rounds, 1 work slot; per item:")
     print(
-        "operation              items  jobs stages  tasks  driver_s   jvm_s  python_s  wall_s"
+        "operation              items  jobs stages  tasks  driver_s   jvm_s"
+        "   jit_s  python_s  wall_s"
     )
     for op, rows in by_op.items():
         n = len(rows)
-        shapes = [job_shape(j) for jobs, _, _ in rows for j in jobs]
-        cpu = {k: sum(c[k] for _, c, _ in rows) / n for k in PARTS}
+        shapes = [job_shape(j) for jobs, *_ in rows for j in jobs]
+        cpu = {k: sum(c[k] for _, c, _, _ in rows) / n for k in PARTS}
         print(
-            f"{op:22s} {n:6d} {sum(len(j) for j, _, _ in rows) / n:5.2f} "
+            f"{op:22s} {n:6d} {sum(len(j) for j, *_ in rows) / n:5.2f} "
             f"{sum(s for s, _, _ in shapes) / n:6.2f} {sum(t for _, t, _ in shapes) / n:6.2f} "
-            f"{cpu['driver']:9.3f} {cpu['jvm']:7.3f} {cpu['python']:9.3f} "
-            f"{sum(w for _, _, w in rows) / n:7.3f}"
+            f"{cpu['driver']:9.3f} {cpu['jvm']:7.3f} {sum(r[2] for r in rows) / n:7.3f} "
+            f"{cpu['python']:9.3f} {sum(r[3] for r in rows) / n:7.3f}"
         )
-    inside = {k: sum(c[k] for _, _, c, _ in items) for k in PARTS}
+    inside = {k: sum(c[k] for _, _, c, _, _ in items) for k in PARTS}
     print(
         "total CPU s: "
         + "  ".join(f"{k}={total[k]:.2f}" for k in PARTS)
+        + f"  (JIT compile: {total_jit:.2f} of jvm)"
         + f"  (outside operations: {sum(total.values()) - sum(inside.values()):.2f})"
         + f"  cpu_ms_per_record={1000 * sum(total.values()) / max(records, 1):.2f}"
     )

@@ -14,6 +14,9 @@ Usage: python tools/sink_profile.py [--seed 1] [--batches 10]
 
 ``--list`` also itemizes the last call's jobs: id, stage count, and
 the name (callsite) of each job's last stage.
+
+``jit_s`` is HotSpot's compile time during the call (see
+``raw_profile.jit_s``), a part of ``cpu_s``.
 """
 
 from __future__ import annotations
@@ -45,6 +48,7 @@ def main() -> int:
     )
     from perfbench.cputime import tree_cpu_s
     from perfbench.inputs import stream_batches, write_batch
+    from raw_profile import jit_s
 
     from hyppo_worker_spark.session import get_spark
     from hyppo_worker_spark.streaming.ingest_dedup import DedupIngestSink
@@ -67,7 +71,7 @@ def main() -> int:
     try:
         sink = DedupIngestSink(spark, os.path.join(work, "store"))
         batches = stream_batches(args.seed, args.batches, args.batch_size)
-        print("batch   in  kept  jobs  stages  tasks   cpu_s  wall_s")
+        print("batch   in  kept  jobs  stages  tasks   cpu_s   jit_s  wall_s")
         rows = []
         for i, batch in enumerate(batches):
             path = os.path.join(work, "source", f"batch-{i:05d}.parquet")
@@ -76,9 +80,9 @@ def main() -> int:
             df = spark.read.schema("doc_id string, text string").parquet(path)
             group = f"sink-call-{i}"
             sc.setJobGroup(group, group)
-            cpu0, t0 = tree_cpu_s(), time.monotonic()
+            cpu0, jit0, t0 = tree_cpu_s(), jit_s(sc), time.monotonic()
             sink(df, i)
-            wall, cpu = time.monotonic() - t0, tree_cpu_s() - cpu0
+            wall, cpu, jit = time.monotonic() - t0, tree_cpu_s() - cpu0, jit_s(sc) - jit0
             sc.setJobGroup("idle", "idle")
             jobs = tracker.getJobIdsForGroup(group)
             stages = tasks = 0
@@ -89,10 +93,10 @@ def main() -> int:
                     stages += 1
                     tasks += st.numTasks if st else 0
             _, n_in, n_kept = sink.admitted_counts[-1]
-            rows.append((len(jobs), stages, tasks, cpu))
+            rows.append((len(jobs), stages, tasks, cpu, jit))
             print(
                 f"{i:5d} {n_in:4d} {n_kept:5d} {len(jobs):5d} {stages:7d} "
-                f"{tasks:6d} {cpu:7.2f} {wall:7.2f}"
+                f"{tasks:6d} {cpu:7.2f} {jit:7.2f} {wall:7.2f}"
             )
         if args.list:
             for jid in sorted(jobs):
@@ -106,6 +110,10 @@ def main() -> int:
             f"median over batches 1+: jobs={med[0]:g} stages={med[1]:g} "
             f"tasks={med[2]:g} cpu_s={med[3]:.2f} "
             f"cpu_ms_per_doc={1000 * med[3] / args.batch_size:.1f}"
+        )
+        print(
+            f"sum over batches 1+: cpu_s={sum(r[3] for r in timed):.2f} "
+            f"jit_s={sum(r[4] for r in timed):.2f}"
         )
     finally:
         spark.stop()
